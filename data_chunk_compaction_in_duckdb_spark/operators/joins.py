@@ -149,16 +149,19 @@ def mark_join(
 
 
 def _global_row_number(
-    df: DataFrame, order: Sequence[str], out_col: str, partitions: int = 32
+    df: DataFrame, order: Sequence[str], out_col: str
 ) -> DataFrame:
     """Distributed global row numbering: range-repartition on the order
     keys, number rows within each partition (one local sort), then add
     broadcast exclusive prefix-counts per partition — no single-task
     window anywhere; the only driver-independent sync is the tiny
-    per-partition count table."""
+    per-partition count table.  One range partition per scheduler slot:
+    partition ids only index the offset table, so the numbering is the
+    same at any partition count."""
     cols = [F.col(c) for c in order]
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     d = (
-        df.repartitionByRange(partitions, *cols)
+        df.repartitionByRange(n_parts, *cols)
         .withColumn("_pid", F.spark_partition_id())
         # REQUIRED for correctness: the numbering window and the
         # per-partition count table both consume this subtree; without

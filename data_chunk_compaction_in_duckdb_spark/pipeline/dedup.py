@@ -673,7 +673,6 @@ def repeated_ngram_spans(
     text_col: str,
     n: int = 6,
     min_docs: int = 2,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Exact-substring dedup, detection stage (the distributed analog of
     suffix-array exact-substring dedup a la Lee et al. 2022): word
@@ -689,27 +688,14 @@ def repeated_ngram_spans(
 
     The gram-building projection is CPU-bound, so the scan is widened
     with ``fan_out`` first (a no-op on already-parallel cluster scans;
-    measured 3.2 s -> 0.8 s at sf0.1 on a single-file local scan).
-    ``kernel="expr"`` (default) builds grams with the JVM HOF
-    expression; the Arrow kernel alternative measured SLOWER at fixture
-    doc sizes (r10 A/B — see ``pipeline.text.exploded_word_ngrams``)."""
+    measured 3.2 s -> 0.8 s at sf0.1 on a single-file local scan)."""
     from data_chunk_compaction_in_duckdb_spark.compaction import fan_out
-    from data_chunk_compaction_in_duckdb_spark.pipeline.text import (
-        exploded_word_ngrams,
-        word_ngrams,
-    )
+    from data_chunk_compaction_in_duckdb_spark.pipeline.text import word_ngrams
 
-    if kernel == "arrow":
-        grams = exploded_word_ngrams(
-            fan_out(docs), id_col, text_col, n, distinct=False
-        )
-    else:
-        grams = fan_out(docs).select(
-            F.col(id_col),
-            F.explode(word_ngrams(text_col, n, distinct=False)).alias(
-                "gram"
-            ),
-        )
+    grams = fan_out(docs).select(
+        F.col(id_col),
+        F.explode(word_ngrams(text_col, n, distinct=False)).alias("gram"),
+    )
     return (
         grams.groupBy("gram")
         .agg(

@@ -9,9 +9,11 @@ cut) or re-packs it; both policies read off this layout.
 
 Scale: the global token offset is the distributed prefix-sum scheme the
 engine already uses for positional numbering (operators/joins.py
-_global_row_number): range-repartition on the order key, ONE local
-cumulative sum per partition, broadcast per-partition totals as
-exclusive offsets.  No single-task window; the persisted pid-tagged
+_global_row_number): range-repartition on the order key (one
+range partition per scheduler slot), ONE local cumulative sum per
+partition, broadcast per-partition totals as exclusive offsets.  No
+single-task window; partition ids only index the offset table, so the
+layout is the same at any partition count.  The persisted pid-tagged
 stream is a correctness requirement (partition ids must come from one
 materialized partitioning — the win_frame_range_value lesson).
 """
@@ -27,13 +29,13 @@ def pack_training_windows(
     id_col: str,
     tokens: Column,
     capacity: int,
-    partitions: int = 32,
 ) -> DataFrame:
     """(id, n_tokens, window_id, offset_in_window, crosses_boundary)
     for the sequential concat-and-chunk layout in id order."""
+    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     d = (
         docs.select(F.col(id_col).alias("_id"), tokens.alias("_tok"))
-        .repartitionByRange(partitions, F.col("_id"))
+        .repartitionByRange(n_parts, F.col("_id"))
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )

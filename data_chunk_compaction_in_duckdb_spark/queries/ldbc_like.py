@@ -220,9 +220,9 @@ _SNB_SPARK = _SNB_SPARK.replace(
 # a BroadcastNestedLoopJoin with its own broadcast-build job per
 # reference; `LATERAL VIEW explode(sequence(0, 9))` is a Generate node —
 # no join, no build job — and trivially produces the same ten digits
-# (interleaved A/B tools/ab_place_explode.py: bi10 med 2.10 -> 1.81 s,
-# bi14 2.30 -> 2.03 s; multiset-identical results; the oracle keeps the
-# original CROSS JOIN text).
+# (interleaved A/B in commit 9b18711, OPTIMIZATION_r10.md: bi10 med
+# 2.10 -> 1.81 s, bi14 2.30 -> 2.03 s; multiset-identical results; the
+# oracle keeps the original CROSS JOIN text).
 _SNB_SPARK = _SNB_SPARK.replace(
     """FROM nation CROSS JOIN (
     SELECT 0 AS d UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL
@@ -231,9 +231,16 @@ _SNB_SPARK = _SNB_SPARK.replace(
     "FROM nation LATERAL VIEW explode(sequence(0, 9)) d AS d)",
     1,
 )
-assert _SNB_SPARK.count("DISTINCT") == _SNB.count("DISTINCT") - 1
-assert "\n  UNION\n" not in _SNB_SPARK
-assert "LATERAL VIEW explode" in _SNB_SPARK and "CROSS JOIN" not in _SNB_SPARK
+# Each rewrite above must have found its text: after a drift in _SNB a
+# missed rewrite would silently keep the slower (still correct) form.
+# An explicit raise, not assert, so the check also holds under -O.
+if not (
+    _SNB_SPARK.count("DISTINCT") == _SNB.count("DISTINCT") - 1
+    and "\n  UNION\n" not in _SNB_SPARK
+    and "LATERAL VIEW explode" in _SNB_SPARK
+    and "CROSS JOIN" not in _SNB_SPARK
+):
+    raise RuntimeError("_SNB_SPARK rewrite no longer matches the _SNB text")
 
 # name -> (description, needs_recursive, SELECT body)
 _QUERIES: dict[str, tuple[str, bool, str]] = {}
@@ -941,8 +948,8 @@ _BI10_TAIL = """friend_list AS (
 # (r10 second pass): broadcast the EDGE table once when its plan-
 # estimated size is broadcast-sized — the four hop joins then share a
 # single build via ReusedExchange (one driver job instead of four
-# sequential per-hop frontier builds; interleaved A/B
-# tools/ab_bi10_knows.py: med 1.70 -> 1.51 s, every rep faster).  At
+# sequential per-hop frontier builds; interleaved A/B in commit 9b18711,
+# OPTIMIZATION_r10.md: med 1.70 -> 1.51 s, every rep faster).  At
 # scale knows is O(|person|) and the estimate blows the cap, so the
 # builder falls back to broadcasting the frontier, whose size IS
 # structurally bounded: the knows graph's out-degree is fixed by its
@@ -978,7 +985,7 @@ def _bi10_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical_recursive_cte.cpp materializes its working table the same
     # way) instead of once per recursion round.  eager=False: the
     # checkpoint fills inside the first job that reads it — no separate
-    # blocking driver job (r10 A/B, tools/ab_materialize.py).
+    # blocking driver job (r10 A/B in commit 7404fe8, OPTIMIZATION_r10.md).
     knows = spark.sql(
         f"WITH {_SNB_SPARK} SELECT k_person1id, k_person2id FROM snb_knows"
     ).localCheckpoint(eager=False)

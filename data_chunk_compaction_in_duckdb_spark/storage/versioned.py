@@ -265,16 +265,30 @@ class VersionedTable:
 
     def _write_data(self, df: DataFrame, mapping: dict[str, str]) -> list[str]:
         """Write df (logical column names) as fresh immutable parquet
-        under physical names; return file names relative to the root."""
+        under physical names; return file names relative to the root.
+
+        A write of zero rows still leaves one schema-only parquet file
+        (Spark writes it so the directory keeps a schema).  The manifest
+        already carries the schema, so 0-row files, told by their footer
+        alone with no Spark job, are deleted and never committed: an
+        empty insert, or a delete that empties its files, adds no live
+        file."""
+        import pyarrow.parquet as pq
+
         renamed = df.select(
             *[F.col(lg).alias(ph) for lg, ph in mapping.items()]
         )
         sub = os.path.join(self.data_dir, uuid.uuid4().hex)
         renamed.write.parquet(sub)
-        return [
-            os.path.relpath(p, self.path)
-            for p in glob.glob(os.path.join(sub, "*.parquet"))
-        ]
+        files = []
+        for p in glob.glob(os.path.join(sub, "*.parquet")):
+            if pq.ParquetFile(p).metadata.num_rows:
+                files.append(os.path.relpath(p, self.path))
+            else:
+                os.remove(p)
+        if not files:
+            shutil.rmtree(sub)
+        return files
 
     # ---------------------------------------------------------- reads
 

@@ -919,51 +919,20 @@ def test_literal_array_bitexact(spark):
             assert _struct.pack("<d", x) == _struct.pack("<d", y), (x, y)
 
 
-def test_exploded_word_ngrams_bitexact(spark):
-    """The Arrow gram-assembly kernel must reproduce the expression path
-    (explode(word_ngrams(...))) byte-for-byte on every edge class: short
-    docs (whole-text gram), exact-n docs, empty text, NULL text, multi/
-    exotic whitespace (tokenized by the SAME JVM split in both paths),
-    repeated grams, unicode, and both distinct modes."""
-    from data_chunk_compaction_in_duckdb_spark.pipeline.text import (
-        exploded_word_ngrams,
-        word_ngrams,
+def test_repeated_ngram_spans_matches_groupby(spark):
+    """The repeated-span detection stage equals a hand-built groupBy over
+    explode(word_ngrams(...)) on a corpus with genuine cross-doc
+    repeats."""
+    from data_chunk_compaction_in_duckdb_spark.pipeline import (
+        repeated_ngram_spans,
     )
+    from data_chunk_compaction_in_duckdb_spark.pipeline.text import word_ngrams
 
-    rows = [
-        (1, "a b c d e f g"),
-        (2, "one two"),                      # shorter than n
-        (3, "exactly three words"),          # == n for n=3
-        (4, ""),                             # empty -> one "" gram
-        (5, None),                           # NULL -> no rows
-        (6, "  leading   and\ttrailing  "),  # \s+ run + tab
-        (7, "x x x x x x"),                  # repeated grams
-        (8, "héllo wörld ünïcode grams hére"),
-        (9, "a b c d"),                 # NBSP is NOT \s in Java
-        (10, "one"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
-    for n in (2, 3, 5, 6):
-        for distinct in (False, True):
-            expr = docs.select(
-                F.col("doc_id"),
-                F.explode(word_ngrams("text", n, distinct)).alias("gram"),
-            )
-            kern = exploded_word_ngrams(docs, "doc_id", "text", n, distinct)
-            a = sorted((r.doc_id, r.gram) for r in expr.collect())
-            b = sorted((r.doc_id, r.gram) for r in kern.collect())
-            assert a == b, (n, distinct, a[:5], b[:5])
-    # cross-check an aggregate consumer end-to-end (the repeated-span
-    # detection shape) on a corpus with genuine cross-doc repeats
     corpus = spark.createDataFrame(
         [(i, "shared boiler plate text here " + ("tail%d " % (i % 3)) * 3)
          for i in range(12)],
         "doc_id INT, text STRING",
     )
-    from data_chunk_compaction_in_duckdb_spark.pipeline import (
-        repeated_ngram_spans,
-    )
-
     got = sorted(
         (r.gram, r.n_docs, r.occurrences, r.first_doc)
         for r in repeated_ngram_spans(corpus, "doc_id", "text", 6, 2).collect()

@@ -48,6 +48,36 @@ def test_insert_is_append_only_and_time_travels(vt, spark, sf_dir):
     assert vt.read(0).count() == v0_count  # snapshot isolation
 
 
+def test_emptied_or_empty_writes_commit_no_file(vt, spark, sf_dir):
+    """A delete that empties every file it touched, and an empty insert,
+    leave exactly the base live files: no 0-row schema-only parquet is
+    committed, on disk or in the manifest."""
+    base_files = set(vt._manifest(vt.latest_version())["files"])
+    batch = (
+        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        .filter(F.col("o_orderkey") % 10 == 7)
+        .withColumn("o_orderkey", -F.col("o_orderkey"))
+    )
+    vt.insert(batch)
+    assert set(vt._manifest(vt.latest_version())["files"]) > base_files
+    vt.delete_where(F.col("o_orderkey") < 0)
+    assert set(vt._manifest(vt.latest_version())["files"]) == base_files
+    vt.insert(batch.limit(0))
+    assert set(vt._manifest(vt.latest_version())["files"]) == base_files
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), vt.path)
+        for d, _, fs in os.walk(vt.data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk - base_files == set(vt._manifest(1)["files"]) - base_files
+
+    empty = VersionedTable.create(spark, vt.path + "_empty", batch.limit(0))
+    assert empty._manifest(0)["files"] == []
+    assert empty.read().schema == batch.schema
+    assert empty.read().count() == 0
+
+
 def test_delete_rewrites_only_affected_files(vt):
     cond = F.col("o_orderstatus") == "F"
     n_match = vt.read().filter(cond).count()
